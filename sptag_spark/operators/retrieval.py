@@ -316,10 +316,16 @@ def rrf_fuse(
     per-doc sum over the union is value-identical to the join's
     coalesce-to-0 addition (a doc appears in ≤ 2 lists; IEEE addition of
     two terms is commutative), for ONE combinable exchange and no sort.
+
+    Input contract: within each list ``id_col`` is unique and ``rank`` is
+    non-null (what ``ranked_topk`` produces). Outside it the answer is
+    still defined — a NULL rank contributes 0.0, as if absent from that
+    list, and a doc repeated within one list sums its contributions —
+    but it is no longer reciprocal-rank fusion.
     """
     from sptag_spark.operators.rank import ranked_topk
 
-    contrib = 1.0 / (F.lit(c) + F.col("rank"))
+    contrib = F.coalesce(1.0 / (F.lit(c) + F.col("rank")), F.lit(0.0))
     fused = (
         list_a.select(F.col(id_col).alias("doc_id"), contrib.alias("_c"))
         .unionByName(

@@ -95,12 +95,15 @@ def persist_sized(
     """Persist + materialize ``df``, then re-layout the CACHE at the
     right-sized width (reading from the cache, so the build plan runs
     once). Returns (frame, row count). No-op beyond the persist when the
-    layout is already right."""
+    layout is already right. The re-laid frame keeps ``df``'s attached
+    build artifacts, so its owner can still ``release`` them."""
+    from sptag_spark.resources import carry_artifacts
+
     df = df.persist()
     n = df.count()
     sized = right_size_cached(df, n, key_col)
     if sized is not df:
-        sized = sized.persist()
+        sized = carry_artifacts(sized.persist(), df)
         sized.count()
         df.unpersist()
         return sized, n

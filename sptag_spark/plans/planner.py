@@ -240,9 +240,7 @@ def warm_replica(
                     import tempfile
 
                     from sptag_spark.serving_local import (
-                        build_refine_store_parallel as build_refine_store,
-                    )
-                    from sptag_spark.serving_local import (
+                        build_refine_store,
                         open_refine_store,
                         refine_fingerprint,
                         refine_store_matches,
@@ -259,7 +257,8 @@ def warm_replica(
                         )
                     # every vector appears in ≥1 posting (replica
                     # invariant), so the id-deduped postings ARE the
-                    # vector set; the build streams, never collects.
+                    # vector set; executors write the store, the driver
+                    # never collects a vector.
                     # A pre-existing store at refine_store_dir is reused
                     # only if its fingerprint matches (stale-store gate).
                     vec_src = postings.select("id", "vector").dropDuplicates(

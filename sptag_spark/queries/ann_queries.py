@@ -687,9 +687,10 @@ def _serve_disk_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a float32 memmap faulted in per probed slab, the reference's SSD
     node shape (`ExtraFullGraphSearcher.h:226-376`) — answers every query
     BIT-IDENTICALLY (ids AND distances) to the distributed ann_search plan
-    over the same artifacts. The packed store is built STREAMED
-    (serving_local.build_packed_store: Spark sorts, the driver consumes
-    chunk-at-a-time — never the shard's vector matrix). Per query:
+    over the same artifacts. The packed store is built OUT-OF-CORE
+    (serving_local.build_packed_store: executors sort and write vector
+    fragments, the driver concatenates the files — never holding the
+    shard's vector matrix). Per query:
     n_results and rows_identical, where rows_identical requires every
     (rank → id, dist) pair to match the Spark plan exactly."""
     import os
@@ -769,11 +770,14 @@ def _posting_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings, every posting cut to the limit, every head_id a real head."""
     heads, postings = spann_index(spark, sf_dir)
     per_vec = postings.groupBy("id").agg(F.count("*").alias("n_replicas"))
+    # each invariant is a min/max, NULL over EMPTY postings; it holds
+    # vacuously there, so coalesce to TRUE — what the oracle answers
     vec_inv = per_vec.agg(
         F.count("*").alias("n_vectors"),
-        (
+        F.coalesce(
             (F.min("n_replicas") >= 1)
-            & (F.max("n_replicas") <= REPLICA_COUNT)
+            & (F.max("n_replicas") <= REPLICA_COUNT),
+            F.lit(True),
         ).alias("replicas_in_range"),
     )
     # ONE per-head pass carries both remaining invariants (r14, guide
@@ -791,8 +795,12 @@ def _posting_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "head_id",
         "left",
     ).agg(
-        (F.max("sz") <= POSTING_LIMIT).alias("size_capped"),
-        F.min(F.coalesce("_is_head", F.lit(False))).alias("heads_valid"),
+        F.coalesce(F.max("sz") <= POSTING_LIMIT, F.lit(True)).alias(
+            "size_capped"
+        ),
+        F.coalesce(
+            F.min(F.coalesce("_is_head", F.lit(False))), F.lit(True)
+        ).alias("heads_valid"),
     )
     return vec_inv.crossJoin(F.broadcast(size_head_inv))
 

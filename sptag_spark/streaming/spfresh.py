@@ -200,7 +200,7 @@ class SpannLiveIndex:
         import os
 
         from sptag_spark.serving_local import (
-            build_packed_store_parallel,
+            build_packed_store,
             packed_store_matches,
             postings_fingerprint,
         )
@@ -208,7 +208,7 @@ class SpannLiveIndex:
         self._store_dir = store_dir
         self._store_value_type = value_type
         if not os.path.exists(os.path.join(store_dir, "meta.json")):
-            build_packed_store_parallel(
+            build_packed_store(
                 self.heads, self.postings, store_dir, value_type=value_type
             )
         elif not packed_store_matches(
@@ -275,11 +275,11 @@ class SpannLiveIndex:
             import os
             import shutil
 
-            from sptag_spark.serving_local import build_packed_store_parallel
+            from sptag_spark.serving_local import build_packed_store
 
             shutil.rmtree(self._store_dir, ignore_errors=True)
             os.makedirs(self._store_dir, exist_ok=True)
-            build_packed_store_parallel(
+            build_packed_store(
                 self.heads, self.postings, self._store_dir,
                 value_type=self._store_value_type,
             )

@@ -945,3 +945,31 @@ def test_routed_heads_never_orphaned(spark):
     ).count()
     assert self_rows == len(head_rows)
     postings.unpersist()
+
+
+def test_posting_histogram_empty_postings_is_vacuously_true(
+    spark, monkeypatch
+):
+    """Over EMPTY postings every invariant holds vacuously: the query
+    answers TRUE (the oracle's answer), not the NULL of a min/max over
+    no rows."""
+    from sptag_spark.queries import ann_queries
+
+    heads = spark.createDataFrame(
+        [(0, [0.0, 0.0])], "head_id long, vector array<float>"
+    )
+    postings = spark.createDataFrame(
+        [], "head_id long, id long, vector array<float>"
+    )
+    monkeypatch.setattr(
+        ann_queries, "spann_index", lambda spark, sf_dir: (heads, postings)
+    )
+    rows = ann_queries._posting_histogram(spark, "unused").collect()
+    assert [r.asDict() for r in rows] == [
+        {
+            "n_vectors": 0,
+            "replicas_in_range": True,
+            "size_capped": True,
+            "heads_valid": True,
+        }
+    ]

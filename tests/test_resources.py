@@ -158,3 +158,25 @@ def test_corpus_stream_pins_release(spark):
         # and get cleaner-reaped between snapshots)
         assert all(not a.is_cached for a in arts)
         assert not getattr(out, "_sptag_artifacts", [])
+
+
+def test_persist_sized_keeps_build_artifacts_releasable(spark):
+    """persist_sized re-lays the cache as a NEW frame; the build-time
+    intermediates attached to its input must ride along, so ivf_index's
+    build sequence — persist_sized(lists) then release(lists,
+    include_self=False) — returns persisted storage to its baseline once
+    the lists cache itself is dropped."""
+    from sptag_spark.index.ivf import ivf_build
+    from sptag_spark.partitioning import persist_sized
+    from sptag_spark.resources import persisted_rdd_count
+
+    base = persisted_rdd_count(spark)
+    before = persisted_rdd_ids(spark)
+    _, lists = ivf_build(_vectors_df(spark, n=600), balanced=True)
+    assert lists._sptag_artifacts  # the balanced-assign join, pinned
+    lists, n = persist_sized(lists, key_col="head_id")
+    assert n == 600
+    release(lists, include_self=False)
+    lists.unpersist()
+    assert not (persisted_rdd_ids(spark) - before)
+    assert persisted_rdd_count(spark) <= base

@@ -55,6 +55,26 @@ def test_rrf_fuse_hand_computed(spark):
     assert got[30] == (3, round(1 / 62, 6))
 
 
+def test_rrf_fuse_null_rank_contributes_zero(spark):
+    """A NULL rank contributes 0.0 — as if the doc were absent from that
+    list — instead of a NULL fused score."""
+    from sptag_spark.operators.retrieval import rrf_fuse
+
+    a = spark.createDataFrame(
+        [(10, 1), (20, None), (40, None)], "doc_id long, rank long"
+    )
+    b = spark.createDataFrame([(20, 2)], "doc_id long, rank long")
+    got = {
+        r["doc_id"]: (r["rank"], r["rrf"])
+        for r in rrf_fuse(a, b, k=3, c=60).collect()
+    }
+    assert got == {
+        10: (1, round(1 / 61, 6)),
+        20: (2, round(1 / 62, 6)),
+        40: (3, 0.0),
+    }
+
+
 def test_bm25_index_matches_inline(spark):
     """The index artifact (one tokenize pass at build, zero corpus scans
     at query) scores identically to the inline two-pass path — including

@@ -40,6 +40,19 @@ def _qlist(spark):
     ]
 
 
+def _serial(rep, queries, k=10, nprobe=6, **kw):
+    """Per-query loop over search_one — the semantic definition of
+    batch_search, which the vectorized path must match row for row."""
+    out = []
+    for qid, q in queries:
+        ids, d = rep.search_one(q, k, nprobe, **kw)
+        out.extend(
+            (int(qid), r + 1, int(i), float(x))
+            for r, (i, x) in enumerate(zip(ids, d))
+        )
+    return out
+
+
 def test_replica_matches_distributed_plan(spark, built):
     _, heads, postings = built
     replica = LocalSpannReplica(heads, postings)
@@ -416,9 +429,13 @@ def test_disk_store_build_streams_never_collects(
 ):
     """VERDICT r9 #1: the packed-store BUILD is itself out-of-core — the
     posting shard is never materialized on the driver (toPandas on any
-    id-carrying frame is forbidden for the duration) and the chunked
-    writer's peak buffer is hard-bounded at chunk_rows vector rows — while
-    search rows stay bit-identical to the all-RAM replica."""
+    id-carrying frame is forbidden for the duration), each executor
+    writer holds at most one Arrow batch of vectors, the fragments are
+    concatenated and cleaned up — while search rows stay bit-identical to
+    the all-RAM replica, and the store bytes do not depend on how many
+    fragments wrote them."""
+    import os
+
     from pyspark.sql import DataFrame
 
     from sptag_spark.serving_local import (
@@ -439,9 +456,24 @@ def test_disk_store_build_streams_never_collects(
 
     monkeypatch.setattr(DataFrame, "toPandas", guard)
     store = str(tmp_path / "streamed")
-    stats = build_packed_store(heads, postings, store, chunk_rows=16)
-    assert stats["max_buffer_rows"] <= 16  # the hard memory witness
-    assert stats["flushes"] >= n_posts // 16 > 1
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "16")
+    try:
+        stats = build_packed_store(heads, postings, store, n_fragments=8)
+    finally:
+        spark.conf.set(conf, old)
+    assert stats["max_batch_rows"] <= 16 < n_posts  # the memory witness
+    assert stats["fragments"] >= 2  # genuinely parallel, not one writer
+    assert not os.path.exists(os.path.join(store, "_fragments"))
+    one = str(tmp_path / "one_writer")
+    build_packed_store(heads, postings, one, n_fragments=1)
+    for fn in ("post_vectors.f32", "head_ids.npy", "H.npy", "post_ids.npy",
+               "indptr.npy"):
+        with open(os.path.join(store, fn), "rb") as fa, open(
+            os.path.join(one, fn), "rb"
+        ) as fb:
+            assert fa.read() == fb.read(), fn
     disk = DiskSpannReplica.from_store(store)
     for qid, q in _qlist(spark)[:8]:
         ri, rd = ram.search_one(q, k=10, nprobe=6)
@@ -453,9 +485,12 @@ def test_disk_store_build_streams_never_collects(
 def test_refine_store_streams_with_fingerprint(
     spark, built, tmp_path, monkeypatch
 ):
-    """The refine store build streams (no driver materialization, bounded
-    chunk buffer) and records the source fingerprint for the staleness
-    gate (ADVICE r9)."""
+    """The refine store build is out-of-core (no driver materialization,
+    one Arrow batch per writer, fragments cleaned up), its bytes do not
+    depend on the fragment count, and it records the source fingerprint
+    for the staleness gate (ADVICE r9)."""
+    import os
+
     from pyspark.sql import DataFrame
 
     from sptag_spark.serving_local import (
@@ -472,11 +507,26 @@ def test_refine_store_streams_with_fingerprint(
         raise AssertionError("vector set materialized on the driver")
 
     monkeypatch.setattr(DataFrame, "toPandas", banned)
-    stats = build_refine_store(
-        v.select("id", "vector"), str(tmp_path / "rf"), chunk_rows=16
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "16")
+    try:
+        stats = build_refine_store(
+            v.select("id", "vector"), str(tmp_path / "rf"), n_fragments=8
+        )
+    finally:
+        spark.conf.set(conf, old)
+    build_refine_store(
+        v.select("id", "vector"), str(tmp_path / "rf1"), n_fragments=1
     )
     monkeypatch.undo()
-    assert stats["max_buffer_rows"] <= 16 and stats["flushes"] > 1
+    assert stats["max_batch_rows"] <= 16 and stats["fragments"] >= 2
+    assert not os.path.exists(str(tmp_path / "rf" / "_fragments"))
+    for fn in ("vectors.f32", "ids.npy"):
+        with open(tmp_path / "rf" / fn, "rb") as fa, open(
+            tmp_path / "rf1" / fn, "rb"
+        ) as fb:
+            assert fa.read() == fb.read(), fn
     assert refine_store_matches(str(tmp_path / "rf"), fp)
     assert not refine_store_matches(
         str(tmp_path / "rf"), {"rows": fp["rows"] + 1, "id_sum": fp["id_sum"]}
@@ -609,32 +659,6 @@ def test_sharded_aggregator_for_budget_sizing(spark, built):
     assert fi.tolist() == ai.tolist()
 
 
-def test_parallel_store_build_byte_identical_to_serial(spark, built, tmp_path):
-    """build_packed_store_parallel (executor fragment write + driver
-    concat) produces a BYTE-identical store to the serial streamer —
-    same global (head_id, id) order via range partitioning, same files."""
-    import os
-
-    from sptag_spark.serving_local import (
-        build_packed_store,
-        build_packed_store_parallel,
-    )
-
-    v, heads, postings = built
-    a = str(tmp_path / "serial")
-    b = str(tmp_path / "parallel")
-    build_packed_store(heads, postings, a, chunk_rows=64)
-    stats = build_packed_store_parallel(heads, postings, b, n_fragments=8)
-    assert stats["fragments"] >= 2  # genuinely parallel, not one writer
-    for fn in ("post_vectors.f32", "head_ids.npy", "H.npy", "post_ids.npy",
-               "indptr.npy"):
-        with open(os.path.join(a, fn), "rb") as fa, open(
-            os.path.join(b, fn), "rb"
-        ) as fb:
-            assert fa.read() == fb.read(), fn
-    assert not os.path.exists(os.path.join(b, "_fragments"))
-
-
 def test_warm_replica_budget_prefers_disk_replica(spark, built, tmp_path):
     """r10 dispatch ladder: under budget with a disk_store_dir, the
     DiskSpannReplica serves — EXACT rows (identical to the full replica)
@@ -718,39 +742,6 @@ def test_sharded_aggregator_disk_shards(spark, built, tmp_path):
     finally:
         ram.close()
         disk.close()
-
-
-def test_parallel_refine_build_byte_identical_to_serial(spark, built, tmp_path):
-    """build_refine_store_parallel produces a byte-identical refine store
-    to the serial streamer (same id order via range partitioning), with
-    the same fingerprint fields in meta.json."""
-    import json
-    import os
-
-    from sptag_spark.serving_local import (
-        build_refine_store,
-        build_refine_store_parallel,
-        refine_fingerprint,
-        refine_store_matches,
-    )
-
-    v, _, _ = built
-    a = str(tmp_path / "serial")
-    b = str(tmp_path / "parallel")
-    build_refine_store(v.select("id", "vector"), a, chunk_rows=64)
-    stats = build_refine_store_parallel(
-        v.select("id", "vector"), b, n_fragments=8
-    )
-    assert stats["fragments"] >= 2
-    for fn in ("vectors.f32", "ids.npy"):
-        with open(os.path.join(a, fn), "rb") as fa, open(
-            os.path.join(b, fn), "rb"
-        ) as fb:
-            assert fa.read() == fb.read(), fn
-    ma = json.load(open(os.path.join(a, "meta.json")))
-    mb = json.load(open(os.path.join(b, "meta.json")))
-    assert (ma["rows"], ma["id_sum"]) == (mb["rows"], mb["id_sum"])
-    assert refine_store_matches(b, refine_fingerprint(v))
 
 
 def test_warm_replica_budget_without_tiers_warns(spark, built):
@@ -842,9 +833,7 @@ def test_batch_search_vectorized_identical_to_serial(spark, built, metric):
     for nprobe in (1, 6, 10**9):
         assert replica.batch_search(
             qs, k=10, nprobe=nprobe, metric=metric
-        ) == replica._batch_search_serial(
-            qs, k=10, nprobe=nprobe, metric=metric
-        )
+        ) == _serial(replica, qs, k=10, nprobe=nprobe, metric=metric)
 
 
 def test_batch_search_ratio_cut_identical_to_serial(spark, built):
@@ -857,9 +846,7 @@ def test_batch_search_ratio_cut_identical_to_serial(spark, built):
     for ratio in (1.2, 1.5, 4.0):
         assert replica.batch_search(
             qs, k=10, nprobe=6, max_dist_ratio=ratio
-        ) == replica._batch_search_serial(
-            qs, k=10, nprobe=6, max_dist_ratio=ratio
-        )
+        ) == _serial(replica, qs, k=10, nprobe=6, max_dist_ratio=ratio)
 
 
 def test_batch_search_chunking_preserves_identity(spark, built, monkeypatch):
@@ -871,7 +858,7 @@ def test_batch_search_chunking_preserves_identity(spark, built, monkeypatch):
     _, heads, postings = built
     replica = LocalSpannReplica(heads, postings)
     qs = _qlist(spark)
-    want = replica._batch_search_serial(qs, k=10, nprobe=6)
+    want = _serial(replica, qs, k=10, nprobe=6)
     monkeypatch.setattr(sl, "_BATCH_QUERY_CHUNK", 7)
     assert replica.batch_search(qs, k=10, nprobe=6) == want
     assert replica.batch_search([], k=10) == []
@@ -936,14 +923,14 @@ def test_pq_replica_batch_identical_to_serial(spark, built, tmp_path):
         for nprobe in (2, 8):
             assert rep.batch_search(
                 qs, k=10, nprobe=nprobe
-            ) == rep._batch_search_serial(qs, k=10, nprobe=nprobe)
+            ) == _serial(rep, qs, k=10, nprobe=nprobe)
     store = str(tmp_path / "refine")
     build_refine_store(v, store)
     rep = LocalPqSpannReplica(
         heads, postings, codes, books, refine_store=open_refine_store(store)
     )
-    assert rep.batch_search(qs, k=10, nprobe=8) == rep._batch_search_serial(
-        qs, k=10, nprobe=8
+    assert rep.batch_search(qs, k=10, nprobe=8) == _serial(
+        rep, qs, k=10, nprobe=8
     )
     assert rep.batch_search([], k=10) == []
 
@@ -988,8 +975,8 @@ def test_replica_serve_time_filters(spark, built):
     got = replica.batch_search(
         qs, k=10, nprobe=6, deleted_ids=dele, allowed_ids=allowed
     )
-    want = replica._batch_search_serial(
-        qs, k=10, nprobe=6, deleted_ids=dele, allowed_ids=allowed
+    want = _serial(
+        replica, qs, k=10, nprobe=6, deleted_ids=dele, allowed_ids=allowed
     )
     assert got == want
     # everything filtered away answers empty, not a crash
@@ -1019,7 +1006,7 @@ def test_pq_and_aggregator_serve_time_filters(spark, built):
     assert qid not in ids and len(ids) == 10
     assert pq_rep.batch_search(
         qs, k=10, nprobe=8, deleted_ids=dele
-    ) == pq_rep._batch_search_serial(qs, k=10, nprobe=8, deleted_ids=dele)
+    ) == _serial(pq_rep, qs, k=10, nprobe=8, deleted_ids=dele)
 
     agg = ShardedSpannAggregator(heads, postings, n_shards=3)
     ids, _ = agg.search_one(q, k=10, nprobe=4, deleted_ids=dele)
@@ -1103,9 +1090,7 @@ def test_batch_filter_survives_slab_cap(spark):
     # survivors are exactly the ids the unfiltered top-26 excludes
     allowed = np.arange(50, 100, dtype=np.int64)
     got = rep.batch_search([(7, q)], k=10, nprobe=1, allowed_ids=allowed)
-    want = rep._batch_search_serial(
-        [(7, q)], k=10, nprobe=1, allowed_ids=allowed
-    )
+    want = _serial(rep, [(7, q)], k=10, nprobe=1, allowed_ids=allowed)
     assert got == want
     assert [r[2] for r in got] == list(range(50, 60))
     # tombstones likewise filter before the cap
@@ -1263,15 +1248,15 @@ def test_int8_value_type_store_row_identical_and_4x_smaller(spark, tmp_path):
     # switching value type at the SAME path must rebuild, not mis-read
     sw = DiskSpannReplica(heads, postings, str(tmp_path / "i8"))
     assert sw.post_V.dtype == np.float32
-    # serial builder writes the identical int8 file (the no-shared-storage
-    # deployment path)
+    # a single writer produces the identical int8 file
     build_packed_store(
-        heads, postings, str(tmp_path / "i8_serial"), value_type="int8"
+        heads, postings, str(tmp_path / "i8_one"), n_fragments=1,
+        value_type="int8",
     )
     i8_again = DiskSpannReplica(
         heads, postings, str(tmp_path / "i8_b"), value_type="int8"
     )
-    with open(tmp_path / "i8_serial" / "post_vectors.i8", "rb") as a, open(
+    with open(tmp_path / "i8_one" / "post_vectors.i8", "rb") as a, open(
         tmp_path / "i8_b" / "post_vectors.i8", "rb"
     ) as b:
         assert a.read() == b.read()
@@ -1358,7 +1343,7 @@ def test_int8_refine_store_exact_rerank_identical(spark, tmp_path):
     from sptag_spark.index.pq import pq_encode, train_pq
     from sptag_spark.serving_local import (
         LocalPqSpannReplica,
-        build_refine_store_parallel,
+        build_refine_store,
         open_refine_store,
     )
 
@@ -1376,7 +1361,7 @@ def test_int8_refine_store_exact_rerank_identical(spark, tmp_path):
     stores = {}
     for vt in ("float32", "int8"):
         d = str(tmp_path / vt)
-        build_refine_store_parallel(vecs, d, value_type=vt)
+        build_refine_store(vecs, d, value_type=vt)
         stores[vt] = open_refine_store(d)
     assert stores["int8"][1].dtype == np.int8
     b_f32 = os.path.getsize(tmp_path / "float32" / "vectors.f32")

@@ -12,7 +12,7 @@ mechanism proven alone in SCALING.md r8-r10:
   P2  build_postings — routed (grouped) replica assignment at 1M heads.
   P3  ShardedSpannAggregator(store_dir=, split="kmeans", scatter_topk=2)
       — per-shard packed stores built EXECUTOR-PARALLEL
-      (build_packed_store_parallel), k-means shard split, center routing.
+      (build_packed_store), k-means shard split, center routing.
       Driver RSS sampled through the build: must stay slab-bounded (the
       r9 scale-killer: no driver materialization of shard vectors).
   P4  save_head_groups — the cold-routing head artifact; one cold routed

@@ -163,7 +163,7 @@ def main() -> None:
     # ---- P4 native int8 stores --------------------------------------
     from sptag_spark.serving_local import (
         DiskSpannReplica,
-        build_refine_store_parallel,
+        build_refine_store,
         open_refine_store,
     )
 
@@ -182,7 +182,7 @@ def main() -> None:
     refine_dir = os.path.join(WORK, "refine_int8")
     shutil.rmtree(refine_dir, ignore_errors=True)
     t0 = time.time()
-    build_refine_store_parallel(
+    build_refine_store(
         vecs.select("id", "vector"), refine_dir, value_type="int8"
     )
     refine_wall = time.time() - t0
